@@ -42,9 +42,8 @@ class DedupConfig:
     probe_width: int = 32
     # ordered weed passes; reference default [first_middle_last]
     # (/root/reference/lib/App/dupfind/App.pm:94-95)
+    # () skips weeding entirely (reference --weedout no, App.pm:233)
     weed_passes: tuple[str, ...] = ("first_middle_last",)
-    # skip weeding entirely (reference --weedout no, App.pm:233)
-    weed_enabled: bool = True
     # max text length considered (reference read_limit 1 GiB, Guts.pm:36)
     max_chars: int = 1 << 30
 

@@ -5,7 +5,11 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
 
   pages (url, warc_ts, html, text, lang)
     -> canon    A5 keep-first per url (earliest warc_ts)
-    -> exact    size/weed/xxhash64 cascade -> exact dup members
+    -> exact    one grouping-sets aggregate over (size, weed probe,
+                xxhash64) key rows -> members of (size, digest) groups
+                with >= 2 rows; the size/weed/digest counters ride the
+                same aggregate.  Equal length + equal xxhash64 is one
+                exact cluster; different lengths never merge.
     -> sigs     shingle -> MinHash + SimHash signatures
     -> cands    LSH band buckets -> candidate pairs (skew-capped)
     -> span_cand (optional) long-shingle candidate index
@@ -21,9 +25,9 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
     -> cc       large-star/small-star components over exact ∪ near edges
     -> clusters (url, cluster_id, is_canonical)
 
-Exact dup groups enter CC as star edges (member -> digest-group min), so
-exact and near evidence merge into one equivalence relation — the
-reference's single final clustering (Common.pm:187) generalized.
+Exact dup groups enter CC as star edges (member -> (size, digest)-group
+min), so exact and near evidence merge into one equivalence relation —
+the reference's single final clustering (Common.pm:187) generalized.
 
 Q1 early-exit (App.pm:268,285,302,319: `say '** NO DUPLICATES FOUND'
 and exit`): a stage that empties its candidate set short-circuits its
@@ -45,6 +49,7 @@ from pyspark.sql import functions as F
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.operators.components import connected_components
 from app_dupfind_spark.operators.exact import (
+    clusters_from_digests,
     exact_dup_cascade,
     keep_first,
 )
@@ -57,17 +62,14 @@ from app_dupfind_spark.plans.pipeline import PipelineRunner, input_fingerprint
 
 
 def exact_star_edges(dup_members: DataFrame, id_col: str = "url") -> DataFrame:
-    """Exact digest groups as (member, group_min) star edges for CC.
-
-    groupBy-min + join back, never a digest-partitioned window
-    (VERDICT r4 #1): a window-min funnels a degenerate exact
-    mega-cluster through one task; the aggregate gets map-side combine
-    and the join is AQE-skew-splittable.  Plan-shape-tested."""
-    mins = dup_members.groupBy("digest").agg(F.min(id_col).alias("m"))
+    """Exact dup groups as (member, cluster_id) star edges for CC: the
+    non-canonical rows of clusters_from_digests, so CC and the exact
+    cluster assembly share one grouping (and its no-window plan shape,
+    plan-shape-tested)."""
     return (
-        dup_members.join(mins, "digest")
-        .where(F.col(id_col) != F.col("m"))
-        .select(F.col(id_col).alias("a"), F.col("m").alias("b"))
+        clusters_from_digests(dup_members, id_col)
+        .where(~F.col("is_canonical"))
+        .select(F.col(id_col).alias("a"), F.col("cluster_id").alias("b"))
     )
 
 
@@ -197,7 +199,7 @@ def near_dup_pipeline(
     fp = runner.fingerprint("canon")
 
     def _exact() -> DataFrame:
-        obs = {k: Observation() for k in ("scan", "size", "weed", "digest")}
+        obs = {k: Observation() for k in ("scan", "groups")}
         for k, o in obs.items():
             runner.track("exact", k, o)
         return exact_dup_cascade(canon.df, cfg, id_col, text_col, counters=obs)
@@ -239,7 +241,7 @@ def near_dup_pipeline(
         c = runner.run_stage(
             "cands",
             # s.df reads from the stage checkpoint — already a barrier
-            lambda: candidate_pairs(s.df, cfg, id_col, sigs_materialized=True)[0],
+            lambda: candidate_pairs(s.df, cfg, id_col)[0],
             upstream_fingerprint=runner.fingerprint("sigs"),
         )
         return s, c

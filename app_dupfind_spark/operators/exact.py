@@ -3,32 +3,46 @@
 Reference shape (/root/reference/lib/App/dupfind/Common.pm:38-204):
 group by size -> drop singleton groups -> re-group by byte samples
 ("weed" passes) -> drop singletons -> group by full xxHash64 digest ->
-drop singletons -> sorted clusters.  Every stage only ever SHRINKS the
-candidate set, and the expensive full-content hash runs last, on the
-fewest rows.
+drop singletons -> sorted clusters.  The reference stages the work so
+it can skip READING files that a cheaper key already rules out
+(Guts.pm:218-222).
 
-Spark realization: the "master dupes hash" {key => [members]}
-(Common.pm:337-367) is kept in its exploded relational form
-(key, member) and every "drop singleton groups" is a group-size HAVING
-implemented as a count window — one shuffle per stage, no driver-side
-state, no collect.
+Spark realization: text is already a column, so size, the fused weed
+probe and the digest are projected in ONE pass over the scan and the
+text is dropped before any shuffle.  Staging then saves no reads, and
+the three group-and-drop rounds become ONE grouping-sets aggregate over
+the skinny (id, size, probe, digest) rows:
 
-Scale notes (100 TB):
-- Stages communicate survivors as DataFrames; each HAVING is one hash
-  shuffle on the stage key.  Probe keys for one weed stage are fused
-  into a single composite grouping key => all configured passes cost
-  ONE shuffle, not one per pass (the reference pays a full re-group per
-  pass, Guts.pm:71-98).
-- The final digest group-by is global (crosses size groups), exactly
-  like the reference's rekeying (Common.pm:187): partial aggregation
-  (map-side combine) makes this cheap because true dup groups are tiny.
-- Never carries `html:binary` or the full text through a shuffle except
-  where the digest needs it; callers should select the minimal columns.
+- the (size, digest) set decides membership: the rows of every group
+  with >= 2 members, fetched back by one left-semi join;
+- the (size) and (size, probe) sets exist for the reference's run
+  counters (scan / size-dup / weed / real-dup, App.pm:424-429), which
+  ride the same aggregate through one observe().
+
+The counters equal the staged cascade's.  A (size, probe) group lies
+inside one size group, so counting it over all rows or over the size
+survivors keeps the same groups; equal text has equal size and probe,
+so no digest group loses a member to an earlier stage.
+
+Hash collisions: texts of equal length and equal xxhash64 are one exact
+cluster (2^-64 odds per pair — the reference's own trade, Common.pm:187).
+Texts of different lengths never share a cluster, whatever their
+digests: membership here and cluster assembly (clusters_from_digests)
+both key on (size, digest).  The probe takes no part in membership, so
+a colliding pair with different probes is not split by the weed pass.
+
+Scale notes (100 TB): Expand triples the skinny rows before a map-side
+partial aggregate, so each input partition forwards at most one row per
+group and set through ONE hash exchange.  Unlike the staged cascade,
+that exchange carries every distinct key, not only a stage's survivors;
+the widest key is the probe (2 * probe_width + 1 chars by default).
+The semi-join back is AQE-skew-splittable.  html:binary and the full
+text never cross a shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
@@ -47,15 +61,11 @@ def with_size(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def having_at_least(
-    df: DataFrame,
-    keys: list[str | Column],
-    n: int = 2,
-    observation: Observation | None = None,
-    counter_prefix: str = "grp",
+    df: DataFrame, keys: list[str | Column], n: int = 2
 ) -> DataFrame:
-    """P2: singleton-group elimination — THE load-bearing reduction,
-    applied after every stage (ref Common.pm:63-65, 196-198;
-    Guts.pm:145-147; MapReduce.pm:70-73).
+    """P2: singleton-group elimination — the reference's reduction after
+    every stage (ref Common.pm:63-65, 196-198; Guts.pm:145-147;
+    MapReduce.pm:70-73), used by the staged query surface.
 
     Implementation: groupBy-count (map-side partial aggregation makes
     the count itself skew-immune — each input partition contributes at
@@ -66,12 +76,6 @@ def having_at_least(
     Null-safe: NULL probe keys group together and survive (the
     reference retains probe-failed files as potential dups,
     Guts.pm:137,158 — recall-preserving failure mode).
-
-    `observation` (A6): in-flight counters `<prefix>_members` (rows in
-    surviving groups) and `<prefix>_groups`, attached to the aggregate
-    — which feeds exactly ONE consumer (the semi-join build side), so
-    the count is exact with zero extra passes.  The reference's
-    size-dup/real-dup run counters (App.pm:424-429) ride here.
     """
     key_cols = [F.col(k) if isinstance(k, str) else k for k in keys]
     names = [f"__k{i}" for i in range(len(key_cols))]
@@ -80,14 +84,8 @@ def having_at_least(
         keyed.groupBy(*names)
         .agg(F.count(F.lit(1)).alias("__grp_n"))
         .where(F.col("__grp_n") >= n)
+        .select(*[F.col(m).alias(f"{m}_s") for m in names])
     )
-    if observation is not None:
-        survivors = survivors.observe(
-            observation,
-            F.sum("__grp_n").alias(f"{counter_prefix}_members"),
-            F.count(F.lit(1)).alias(f"{counter_prefix}_groups"),
-        )
-    survivors = survivors.select(*[F.col(m).alias(f"{m}_s") for m in names])
     # eqNullSafe: NULL keys are a real group (P4) and must survive the
     # join back — plain equi-join semantics would silently drop them
     cond = None
@@ -131,89 +129,83 @@ def exact_dup_cascade(
     id_col: str = "url",
     text_col: str = "text",
     counters: dict[str, Observation] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Full cascade: size HAVING -> weed HAVING -> digest HAVING.
+    """Exact-duplicate members: one grouping-sets aggregate over the
+    skinny key rows + one left-semi join back (see the module docstring).
 
-    Returns (id_col, size, digest) for every member of a multi-member
-    digest group — the relational "master dupes hash" after the digest
-    stage (Common.pm:187-198).
+    Returns (id_col, size, digest) for every member of a (size, digest)
+    group with >= 2 members — the relational "master dupes hash" after
+    the digest stage (Common.pm:187-198).
 
-    `materialize` binds the skinny projection behind a localCheckpoint:
-    each downstream HAVING references its input from two plan branches
-    (aggregate + semi-join probe), so without a barrier the TEXT column
-    would be re-scanned and re-hashed once per branch product — at
-    100 TB that's the dominant cost.  With the barrier, text is read
-    exactly once and every re-reference replays ~30-byte rows.
+    The skinny projection is bound behind a barrier: the aggregate and
+    the semi-join probe side both read it, so without one the text
+    column would be scanned and hashed once per branch.
 
-    `counters` (A6): optional Observations keyed 'scan', 'size',
-    'weed', 'digest' — the reference's run-summary counter triplet
-    (App.pm:424-429) collected in-flight.  'scan' rides the skinny
-    projection (exact only with `materialize`, which forces the single
-    evaluation); the others ride each HAVING's aggregate.
+    `counters` (A6): optional Observations keyed 'scan' (`scan_members`,
+    rows of the skinny projection) and 'groups' (`<stage>_members` and
+    `<stage>_groups` of the surviving size, weed and digest groups — the
+    reference's run-summary counters, App.pm:424-429).  The weed pair is
+    reported only when weed passes are configured, and size-0 rows are
+    left out of it: their byte samples are undefined in the reference
+    (Common.pm:100,107).
     """
-    # ALL text-derived keys are projected in ONE pass over the scan and
-    # the text column is DROPPED before any shuffle: the cascade's
-    # staged HAVINGs then move (id, size, probe, digest) — ~30 bytes —
-    # instead of whole documents.  The reference staged probe-then-
-    # digest to avoid READING files it could prune (Guts.pm:218-222);
-    # with text already columnar, xxhash64 costs ~nothing relative to
-    # shuffling text, so computing every key upfront and pruning on
-    # skinny rows is the scale-correct inversion of the same idea.
-    # The logical cascade (size -> weed -> digest, P2 after each) is
-    # unchanged — only the projection point moved.
     base = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
     base = with_size(base, text_col).where(F.col("size") <= cfg.max_chars)
-    probe = (
-        weed_key(cfg, text_col)
-        if (cfg.weed_enabled and cfg.weed_passes)
-        else F.lit(None).cast("string")
-    )
-    skinny = base.select(
-        F.col(id_col),
-        F.col("size"),
-        probe.alias("__probe"),
-        text_digest(text_col).alias("digest"),
-    )
+    keys = {"size": F.col("size")}
+    if cfg.weed_passes:
+        keys["__probe"] = weed_key(cfg, text_col)
+    keys["digest"] = text_digest(text_col)
+    skinny = base.select(F.col(id_col), *[e.alias(k) for k, e in keys.items()])
     counters = counters or {}
     if "scan" in counters:
         skinny = skinny.observe(
             counters["scan"], F.count(F.lit(1)).alias("scan_members")
         )
-    if materialize:
-        skinny = materialize_barrier(skinny, cfg)
+    skinny = materialize_barrier(skinny, cfg)
 
-    # Stage 1: same-size candidates (A1 + P2).
-    survivors = having_at_least(
-        skinny, ["size"], observation=counters.get("size"), counter_prefix="size"
+    sets = {"size": ["size"], "digest": ["size", "digest"]}
+    if cfg.weed_passes:
+        sets["weed"] = ["size", "__probe"]
+    groups = skinny.groupingSets(list(sets.values()), *keys).agg(
+        F.count(F.lit(1)).alias("__n"), F.grouping_id().alias("__gid")
     )
 
-    # Stage 2: weed passes (A2 + P2), zero-size bypass (P3): size-0 rows
-    # skip probing (their samples are undefined in the reference,
-    # Common.pm:100,107) and ride straight to the digest stage.
-    if cfg.weed_enabled and cfg.weed_passes:
-        zero = survivors.where(F.col("size") == 0)
-        nonzero = survivors.where(F.col("size") > 0)
-        weeded = having_at_least(
-            nonzero, ["size", "__probe"],
-            observation=counters.get("weed"), counter_prefix="weed",
+    def gid(cols: list[str]) -> int:
+        # grouping_id() sets bit len-1-i for each key i NOT in the set
+        return sum(
+            1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in cols
         )
-        survivors = weeded.unionByName(zero)
 
-    # Stage 3: global digest grouping (A3 + P2).
-    dup_members = having_at_least(
-        survivors, ["digest"], observation=counters.get("digest"),
-        counter_prefix="digest",
+    # per stage: its set's groups that survive (>= 2 members)
+    hit = {
+        stage: (F.col("__gid") == gid(cols)) & (F.col("__n") >= 2)
+        for stage, cols in sets.items()
+    }
+    if "weed" in hit:
+        hit["weed"] &= F.col("size") > 0
+    if "groups" in counters:
+        # before the filter: the aggregate feeds ONE consumer (the
+        # semi-join build side), so every group is counted exactly once
+        groups = groups.observe(counters["groups"], *[
+            m
+            for stage, h in hit.items()
+            for m in (
+                F.sum(F.when(h, F.col("__n"))).alias(f"{stage}_members"),
+                F.count_if(h).alias(f"{stage}_groups"),
+            )
+        ])
+    dup_keys = groups.where(hit["digest"]).select("size", "digest")
+    return skinny.join(dup_keys, ["size", "digest"], "left_semi").select(
+        id_col, "size", "digest"
     )
-    return dup_members.select(id_col, "size", "digest")
 
 
 def clusters_from_digests(
     dup_members: DataFrame, id_col: str = "url"
 ) -> DataFrame:
-    """O1/O2/O3: cluster assembly.  cluster_id = min(id) within digest
-    group (lex-first member is the 'original', ref Common.pm:206-219,
-    273); is_canonical marks the cluster minimum (keep-first semantics
+    """O1/O2/O3: cluster assembly.  cluster_id = min(id) within the
+    (size, digest) group, the cascade's membership key (lex-first member
+    is the 'original', ref Common.pm:206-219, 273); is_canonical marks the cluster minimum (keep-first semantics
     of the delete stage, Common.pm:263-300 — materialized as a column,
     the deletion itself is a MERGE/DELETE against the table, never
     row-at-a-time).
@@ -228,10 +220,12 @@ def clusters_from_digests(
     exactly rank-1 of the old (digest, id-asc) window because
     cluster_id IS the group minimum.  Enforced by the pipeline
     plan-shape test (tests/test_report.py)."""
-    mins = dup_members.groupBy("digest").agg(F.min(id_col).alias("cluster_id"))
+    mins = dup_members.groupBy("size", "digest").agg(
+        F.min(id_col).alias("cluster_id")
+    )
     cols = dup_members.columns
     return (
-        dup_members.join(mins, "digest")
+        dup_members.join(mins, ["size", "digest"])
         .withColumn("is_canonical", F.col(id_col) == F.col("cluster_id"))
         .select(*cols, "cluster_id", "is_canonical")
     )

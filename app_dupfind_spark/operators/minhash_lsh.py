@@ -102,15 +102,12 @@ def candidate_pairs(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     materialize: bool = True,
-    sigs_materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (a, b, n_bands) with a < b, plus the skew
     report (band, band_hash, bucket_size) of truncated buckets.
 
-    `sigs_materialized` is kept for API stability; since r6 the
-    materialized path always builds its own band-hash-array barrier
-    (which reads `sigs` exactly once), so the flag no longer changes
-    the plan — only materialize=False skips barriers entirely.
+    The materialized path builds its own band-hash-array barrier, which
+    reads `sigs` exactly once; materialize=False skips barriers entirely.
 
     J1 in SURVEY §2.5: same-key self-pairing, the grouping-as-join
     pattern the reference uses everywhere (A1–A3).

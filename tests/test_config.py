@@ -31,3 +31,11 @@ def test_weed_pass_ordering_is_part_of_identity():
     a = DedupConfig(weed_passes=("first", "last"))
     b = DedupConfig(weed_passes=("last", "first"))
     assert a.config_hash() != b.config_hash()
+
+
+def test_cli_empty_tuple_value_is_empty_tuple():
+    # `--config weed_passes=` is how the CLI says "no weed passes"
+    from jobs.run_pipeline import parse_config
+
+    assert parse_config(["weed_passes="]).weed_passes == ()
+    assert parse_config(["weed_passes=first,last"]).weed_passes == ("first", "last")

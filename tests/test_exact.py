@@ -58,8 +58,8 @@ def test_zero_size_docs_cluster_via_bypass(spark, pages, corpus, cfg):
 def test_weed_stage_never_splits_true_duplicates(spark, pages, corpus):
     """Recall preservation: enabling weeding must not change the final
     clusters (the reference's weed passes are pure optimizations)."""
-    with_weed = exact_dup_clusters(pages, DedupConfig(weed_enabled=True))
-    without = exact_dup_clusters(pages, DedupConfig(weed_enabled=False))
+    with_weed = exact_dup_clusters(pages, DedupConfig())
+    without = exact_dup_clusters(pages, DedupConfig(weed_passes=()))
     a = sorted(map(tuple, with_weed.select("url", "cluster_id").collect()))
     b = sorted(map(tuple, without.select("url", "cluster_id").collect()))
     assert a == b
@@ -130,3 +130,15 @@ def test_keep_first_null_order_values(spark):
     out = keep_first(df, ["key"], "ts", "id").collect()
     got = {r["key"]: (r["ts"], r["id"]) for r in out}
     assert got == {"u1": (None, "b"), "u2": (2, "c")}
+
+
+def test_cascade_plan_is_one_grouping_sets_aggregate(spark, pages, cfg):
+    """The cascade is ONE Expand + aggregate (one exchange) over the
+    barriered skinny rows and a semi-join back: text is read once, by
+    the barrier, and no Window funnels a mega-group through one task."""
+    dups = exact_dup_cascade(pages, cfg)
+    plan = dups._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Expand") == 1
+    assert plan.count("HashAggregate") == 2  # partial + final
+    assert "Window" not in plan
+    assert "text#" not in plan

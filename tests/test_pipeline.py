@@ -4,7 +4,7 @@ and partitioning invariance, resumability — the BASELINE.json gate
 
 from __future__ import annotations
 
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import pytest
 
@@ -201,9 +201,20 @@ def test_q1_skip_does_not_poison_resume(spark, pages, tmp_path):
     assert clusters.count() == pages.count()
 
 
-def test_a6_counters_reference_triplet(result, corpus):
-    """A6 (App.pm:424-429): the scan/size-dup/real-dup counter triplet
-    collected in-flight via df.observe() — no second pass."""
+def _dup_groups(keys) -> tuple[int, int]:
+    """(members, groups) of the key groups with >= 2 members."""
+    sizes = [n for n in Counter(keys).values() if n >= 2]
+    return sum(sizes), len(sizes)
+
+
+def test_a6_counters_reference_triplet(result, pages, corpus):
+    """A6 (App.pm:424-429): the scan/size-dup/weed/real-dup counters
+    collected in-flight via df.observe() — no second pass — checked
+    against a pure-Python recount of the corpus."""
+    from pyspark.sql import Observation
+
+    from app_dupfind_spark.operators.exact import exact_dup_cascade
+
     _, runner, _ = result
     c = runner.counters
     assert c["canon"]["rows_in"] == len(corpus.rows)
@@ -214,13 +225,34 @@ def test_a6_counters_reference_triplet(result, corpus):
     # real dups: members of multi-member digest groups == exact stage rows_out
     exact_rows = next(m for m in runner.metrics if m["stage"] == "exact")["rows_out"]
     assert ex["digest_members"] == exact_rows
-    # ground truth: members of multi-member byte-identical text groups
-    # (exact clusters + the empty-doc group) survive the whole cascade
-    by_text = defaultdict(int)
-    for r in corpus.rows:
-        by_text[r["text"]] += 1
-    n_exact_members = sum(n for n in by_text.values() if n >= 2)
-    assert ex["digest_members"] == n_exact_members
+
+    texts = [r["text"] for r in corpus.rows]
+    w = DedupConfig().probe_width
+
+    def probe(t: str) -> str:  # the default first_middle_last pass
+        return t[:w] if len(t) <= w else t[:w] + t[len(t) // 2] + t[-w:]
+
+    expect = {
+        "size": _dup_groups(len(t) for t in texts),
+        # size-0 rows bypass the weed pass
+        "weed": _dup_groups((len(t), probe(t)) for t in texts if t),
+        # members of byte-identical text groups (exact clusters + the
+        # empty-doc group) survive the whole cascade
+        "digest": _dup_groups(texts),
+    }
+    got = {s: (ex[f"{s}_members"], ex[f"{s}_groups"]) for s in expect}
+    assert got == expect
+
+    # no weed passes -> no weed counters, the other counters unchanged
+    obs = {k: Observation() for k in ("scan", "groups")}
+    exact_dup_cascade(
+        pages, DedupConfig(weed_passes=()), counters=obs
+    ).write.format("noop").mode("overwrite").save()
+    off = {**obs["scan"].get, **obs["groups"].get}
+    assert not any(k.startswith("weed_") for k in off)
+    assert off == {
+        k: v for k, v in ex.items() if k.startswith(("scan_", "size_", "digest_"))
+    }
 
 
 def test_input_change_invalidates_same_checkpoint_dir(spark, pages, tmp_path):
